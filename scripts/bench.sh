@@ -4,13 +4,17 @@
 # summary JSON from bench_out.json as the genuinely last stdout line.
 # With build.sbt's StdoutOutput + showSuccess:=false the bare sbt
 # invocation already ends with that line; this wrapper guarantees it
-# even if sbt settings drift.
+# even if sbt settings drift. A failed run prints no summary: the old
+# bench_out.json is deleted first, and the re-print is skipped when sbt
+# exits non-zero, so a stale summary can never pass for this run's.
 #
 # Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... scripts/bench.sh
 set -o pipefail
 cd "$(dirname "$0")/.."
+rm -f bench_out.json
 sbt -batch "runMain graft.Bench"
 rc=$?
+[ "$rc" -eq 0 ] || exit "$rc"
 python3 - <<'EOF'
 import json
 d = json.load(open("bench_out.json"))
@@ -21,4 +25,3 @@ print(json.dumps({
     "timing": d["timing"], "queries_file": "bench_out.json",
 }, separators=(",", ":")))
 EOF
-exit $rc

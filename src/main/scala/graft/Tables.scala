@@ -1,6 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
+import org.apache.spark.sql.types.StructType
 
 /** Table access layer over the driver-provided parquet test data
   * (TESTDATA.md). Mirrors the reference's catalog of base relations
@@ -11,9 +19,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`src/backend/access/aocs/aocsam.c`, `contrib/pax_storage/`): RLE /
   * dictionary / zstd per column, row-group zone maps for min/max skipping.
   *
-  * Scale note: at 100 TB these would be partitioned/bucketed tables in a
-  * real catalog; the loader keeps plain `spark.read.parquet` so Catalyst
-  * sees a `FileSourceScanExec` with full filter/column pushdown.
+  * Segments: a base file is the reference's `DISTRIBUTED RANDOMLY` table
+  * (`gp_distribution_policy.h:86-111`) before it is spread over the
+  * segments. When a file has fewer row groups than the input splits Spark
+  * plans for it, the splits without a row-group midpoint read nothing and
+  * one task decodes the whole table; `df` then reads a one-time copy cut
+  * into `defaultParallelism` contiguous files instead, one segment per core
+  * (see `segmented`). Either way the read is plain `spark.read.parquet`,
+  * so Catalyst sees a `FileSourceScanExec` with full filter/column
+  * pushdown.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -96,7 +110,7 @@ object Tables {
     * the same JVM re-infers instead of silently misreading through a
     * stale schema (missing columns as nulls — the r14 advice finding). */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
 
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
@@ -104,8 +118,67 @@ object Tables {
     val f = new java.io.File(path)
     val schema = schemaCache.computeIfAbsent((path, f.lastModified, f.length),
       k => spark.read.parquet(k._1).schema)
-    val raw = spark.read.schema(schema).parquet(path)
+    val raw = spark.read.schema(schema).parquet(segmented(spark, path, schema))
     if (name == "events") withNormalizedTs(raw) else raw
+  }
+
+  /** (row groups, rows) of a base file from its parquet footer, per
+    * (path, mtime, size) like `schemaCache`. */
+  private val footers = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (Int, Long)]()
+
+  /** Segment copies made in this JVM, per (source path, mtime, size,
+    * segment count, warehouse). `computeIfAbsent` makes parallel sessions
+    * wait for the one copy instead of writing their own or reading a
+    * partial one. */
+  private val segments = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Int, String), String]()
+
+  /** The path `df` reads for base file `path`: `path` itself, or its
+    * segment copy when Spark's split planning (`FilePartition.maxSplitBytes`,
+    * from `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and the
+    * default parallelism) gives the file more input splits than it has row
+    * groups. A split reads only the row groups whose midpoint it holds, so
+    * the extra splits would be empty tasks. The copy is one ordered pass
+    * writing `ceil(rows / n)` rows per file for `n = defaultParallelism`:
+    * each file is a contiguous slice of the source, so its row-group
+    * min/max stay as tight as the source's. It is written from a fresh
+    * session, so no rule of the caller's session (an RLS policy, a matview
+    * rewrite) filters what it copies. It lives under
+    * `spark.sql.warehouse.dir` in a directory named by the source's
+    * absolute path, mtime and size, and is written to a temp directory and
+    * renamed, so a reader never sees a partial copy and a rewritten source
+    * gets a fresh one. A directory source (Spark-written part files) is
+    * read in place. */
+  private def segmented(spark: SparkSession, path: String, schema: StructType): String = {
+    val f = new java.io.File(path)
+    if (!f.isFile) return path
+    val (src, mtime, size) = (f.getAbsolutePath, f.lastModified, f.length)
+    val (rowGroups, rows) = footers.computeIfAbsent((src, mtime, size), _ => {
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(src), spark.sparkContext.hadoopConfiguration))
+      try (in.getRowGroups.size, in.getRecordCount) finally in.close()
+    })
+    val maxSplit = FilePartition.maxSplitBytes(spark, Seq(PartitionDirectory(InternalRow.empty,
+      Array(new FileStatus(size, false, 1, 0, mtime, new Path(src))))))
+    if (rowGroups >= (size + maxSplit - 1) / maxSplit) return path
+    val n = spark.sparkContext.defaultParallelism
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
+    segments.computeIfAbsent((src, mtime, size, n, wh), _ => {
+      val key = java.util.UUID.nameUUIDFromBytes(s"$src|$mtime|$size|$n".getBytes("UTF-8"))
+      val dst = Paths.get(wh, "graft_segments", key.toString, f.getName)
+      if (!Files.isDirectory(dst)) {
+        val tmp = dst.resolveSibling(s"_tmp_${java.util.UUID.randomUUID}")
+        val copier = spark.newSession()
+        configure(copier)
+        copier.read.schema(schema).parquet(src).coalesce(1).write
+          .option("maxRecordsPerFile", (rows + n - 1) / n)
+          .parquet(tmp.toString)
+        // losing a rename race to another process: read its copy
+        try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if Files.isDirectory(dst) =>
+          FileUtils.deleteDirectory(tmp.toFile) }
+      }
+      dst.toString
+    })
   }
 
   /** Normalize an events-shaped frame's `ts` to session-TZ TIMESTAMP
